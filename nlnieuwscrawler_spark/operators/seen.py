@@ -33,10 +33,9 @@ filter's state of record is a **DataFrame of partition rows**
   partition_id``, OR-reduce inside ``applyInPandas`` — executor-side;
 - **probe**: candidates co-shuffled to their ``pmod(fp, P)`` slice via a
   ``cogroup``-``applyInPandas``, probed against only that slice (at
-  P = 16384 a 15 GB filter is ~0.9 MB per task). Small filters
-  (≤ ``broadcast_max_bytes`` total, default 32 MiB) instead take a
-  broadcast fast path that skips the candidate shuffle — same result,
-  chosen by size exactly like a broadcast-vs-shuffled hash join.
+  P = 16384 a 15 GB filter is ~0.9 MB per task). This is the only probe
+  path, at every filter size: building the probe plan runs no Spark job
+  and no bitmap byte ever reaches the driver.
 
 :class:`CuckooSeenSet` is the deletable variant (frontier retractions):
 same partition-row state and probe machinery, 4-way bucketed cuckoo
@@ -55,14 +54,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nlnieuwscrawler_spark.pyhash import bloom_positions, cuckoo_index_tag
 
 DEFAULT_BITS_PER_KEY = 12          # fpp ≈ 0.3% at k=8
 DEFAULT_N_HASHES = 8
 MIN_PARTITION_BITS = 1 << 13       # 1 KiB floor per partition
-BROADCAST_MAX_BYTES = 32 << 20     # above this the probe co-shuffles instead
 
 FILTER_SCHEMA = (
     "partition_id int, bloom binary, n_items long, n_bits long, n_hashes int"
@@ -100,7 +97,6 @@ class BloomSeenSet:
         n_hashes: int,
         df: DataFrame | None = None,
         n_items: int = 0,
-        broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
     ):
         self.spark = spark
         self.n_partitions = n_partitions
@@ -108,29 +104,17 @@ class BloomSeenSet:
         self.n_hashes = n_hashes
         self.df = df if df is not None else spark.createDataFrame([], FILTER_SCHEMA)
         self.n_items = n_items
-        self.broadcast_max_bytes = broadcast_max_bytes
-        self._bcast = None  # cached broadcast of collected slices; None = stale
 
     # -- construction ---------------------------------------------------------
     @classmethod
     def empty(
-        cls,
-        spark: SparkSession,
-        n_partitions: int,
-        expected_keys: int,
-        broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
+        cls, spark: SparkSession, n_partitions: int, expected_keys: int
     ) -> "BloomSeenSet":
         n_bits, n_hashes = bloom_params(expected_keys, n_partitions)
-        return cls(spark, n_partitions, n_bits, n_hashes,
-                   broadcast_max_bytes=broadcast_max_bytes)
+        return cls(spark, n_partitions, n_bits, n_hashes)
 
     @classmethod
-    def from_df(
-        cls,
-        df: DataFrame,
-        n_partitions: int,
-        broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
-    ) -> "BloomSeenSet":
+    def from_df(cls, df: DataFrame, n_partitions: int) -> "BloomSeenSet":
         """Resume from checkpointed partition rows. One metadata-sized
         aggregate for the geometry + item count; bitmap rows stay
         distributed."""
@@ -141,32 +125,15 @@ class BloomSeenSet:
         ).collect()
         if not head or head[0]["n_bits"] is None:
             return cls(df.sparkSession, n_partitions,
-                       MIN_PARTITION_BITS, DEFAULT_N_HASHES,
-                       broadcast_max_bytes=broadcast_max_bytes)
+                       MIN_PARTITION_BITS, DEFAULT_N_HASHES)
         return cls(
             df.sparkSession, n_partitions,
             int(head[0]["n_bits"]), int(head[0]["n_hashes"]),
             df=df, n_items=int(head[0]["n_items"]),
-            broadcast_max_bytes=broadcast_max_bytes,
         )
 
     def to_df(self) -> DataFrame:
         return self.df
-
-    def _invalidate_bcast(self) -> None:
-        """Release the cached probe broadcast's EXECUTOR blocks before
-        dropping the handle — `self._bcast = None` alone leaves the stale
-        filter copy on every executor until GC gets around to it; across
-        hundreds of epochs those accumulate into real memory. unpersist
-        (not destroy): lazy plans built from an earlier probe() may still
-        reference this broadcast — they transparently re-fetch from the
-        driver if re-executed, whereas destroy() would fail them."""
-        if self._bcast is not None:
-            try:
-                self._bcast.unpersist()
-            except Exception:
-                pass  # context shutting down
-            self._bcast = None
 
     @property
     def total_bytes(self) -> int:
@@ -233,51 +200,33 @@ class BloomSeenSet:
         # metadata-sized aggregate (one long), not the bitmap
         row = merged.agg(F.sum("n_items").alias("n")).collect()[0]
         self.n_items = int(row["n"] or 0)
-        self._invalidate_bcast()
 
     # -- probe ----------------------------------------------------------------
     def probe(self, df: DataFrame, fp_col: str) -> DataFrame:
-        """Add ``maybe_seen``: broadcast fast path for small filters,
-        co-shuffled per-partition probe at scale."""
+        """Add ``maybe_seen``. Candidates shuffle ONCE on pmod(fp, P) to
+        meet their slice; each cogroup task holds exactly one slice
+        (total_bytes / P), so no task — let alone the driver — ever sees
+        the whole bitmap."""
         if self.n_items == 0:
             return df.withColumn("maybe_seen", F.lit(False))
-        if self.total_bytes <= self.broadcast_max_bytes:
-            return self._probe_broadcast(df, fp_col)
-        return self._probe_partitioned(df, fp_col)
+        # distinct fps → cogroup with the filter's partition rows → join
+        # maybe_seen back on fp
+        fps = (
+            df.select(F.col(fp_col).alias("fp")).distinct()
+            .withColumn("__pid", _pid("fp", self.n_partitions))
+        )
+        probed = (
+            fps.groupBy("__pid")
+            .cogroup(self.df.groupBy(F.col("partition_id").cast("int")))
+            .applyInPandas(self._probe_group(), "fp long, maybe_seen boolean")
+        )
+        return df.join(
+            probed.withColumnRenamed("fp", fp_col), on=fp_col, how="left"
+        ).withColumn("maybe_seen", F.coalesce("maybe_seen", F.lit(False)))
 
-    def _collect_slices(self) -> np.ndarray:
-        bitmap = np.zeros((self.n_partitions, self.n_bits // 8), dtype=np.uint8)
-        for r in self.df.collect():  # gated: total_bytes ≤ broadcast_max_bytes
-            bitmap[int(r["partition_id"])] |= np.frombuffer(
-                bytes(r["bloom"]), dtype=np.uint8
-            )
-        return bitmap
-
-    def _probe_broadcast(self, df: DataFrame, fp_col: str) -> DataFrame:
-        if self._bcast is None:
-            self._bcast = df.sparkSession.sparkContext.broadcast(
-                (self._collect_slices(), self.n_partitions,
-                 self.n_bits, self.n_hashes)
-            )
-        b = self._bcast
-
-        @F.pandas_udf(T.BooleanType())
-        def probe(fps: pd.Series) -> pd.Series:
-            bitmap, n_parts, n_bits, n_hashes = b.value
-            a = fps.to_numpy(dtype=np.int64)
-            pid = (a % n_parts + n_parts) % n_parts  # pmod
-            pos = bloom_positions(a, n_bits, n_hashes)
-            byte_idx = (pos >> np.uint64(3)).astype(np.int64)
-            bit = np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
-            hit = (bitmap[pid[:, None], byte_idx] & bit) != 0
-            return pd.Series(hit.all(axis=1))
-
-        return df.withColumn("maybe_seen", probe(F.col(fp_col)))
-
-    def _probe_partitioned(self, df: DataFrame, fp_col: str) -> DataFrame:
-        """Candidates shuffle ONCE on pmod(fp, P) to meet their slice; each
-        cogroup task holds exactly one slice (total_bytes / P), so no task —
-        let alone the driver — ever sees the whole bitmap."""
+    def _probe_group(self):
+        """The cogroup function that probes one partition's fps against
+        that partition's slice."""
         n_bits, n_hashes = self.n_bits, self.n_hashes
 
         def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -291,24 +240,7 @@ class BloomSeenSet:
             hit = (arr[byte_idx] & bit) != 0
             return pd.DataFrame({"fp": fps, "maybe_seen": hit.all(axis=1)})
 
-        return _join_back_probe(df, fp_col, self.df, self.n_partitions, probe_group)
-
-
-def _join_back_probe(df, fp_col, filter_df, n_partitions, probe_group) -> DataFrame:
-    """Shared partitioned-probe plumbing: distinct fps → cogroup with the
-    filter's partition rows → join maybe_seen back on fp."""
-    fps = (
-        df.select(F.col(fp_col).alias("fp")).distinct()
-        .withColumn("__pid", _pid("fp", n_partitions))
-    )
-    probed = (
-        fps.groupBy("__pid")
-        .cogroup(filter_df.groupBy(F.col("partition_id").cast("int")))
-        .applyInPandas(probe_group, "fp long, maybe_seen boolean")
-    )
-    return df.join(
-        probed.withColumnRenamed("fp", fp_col), on=fp_col, how="left"
-    ).withColumn("maybe_seen", F.coalesce("maybe_seen", F.lit(False)))
+        return probe_group
 
 
 # -- cuckoo table primitives (module-level: closures ship plain ints only) ----
@@ -393,7 +325,7 @@ def _cuckoo_delete(table: np.ndarray, fps: np.ndarray, nb: int) -> int:
 class CuckooSeenSet(BloomSeenSet):
     """Deletable seen-set: partitioned 4-way cuckoo filter, 12-bit tags.
 
-    Same DataFrame-of-partition-rows state and probe selection as the
+    Same DataFrame-of-partition-rows state and probe plumbing as the
     Bloom; the ``bloom`` column holds the bucket table (n_buckets × 4
     uint16 tags, 0 = empty) and ``n_bits``/``n_hashes`` carry
     (n_buckets·64, tag_bits) so FILTER_SCHEMA and the checkpoint path are
@@ -409,38 +341,31 @@ class CuckooSeenSet(BloomSeenSet):
     TAG_BITS = CUCKOO_TAG_BITS
     SLOTS = CUCKOO_SLOTS
 
-    def __init__(self, spark, n_partitions, n_buckets, df=None, n_items=0,
-                 broadcast_max_bytes: int = BROADCAST_MAX_BYTES):
+    def __init__(self, spark, n_partitions, n_buckets, df=None, n_items=0):
         # reuse FILTER_SCHEMA: n_bits := n_buckets*SLOTS*16, n_hashes := TAG_BITS
         super().__init__(spark, n_partitions, n_buckets * self.SLOTS * 16,
-                         self.TAG_BITS, df=df, n_items=n_items,
-                         broadcast_max_bytes=broadcast_max_bytes)
+                         self.TAG_BITS, df=df, n_items=n_items)
         self.n_buckets = n_buckets
 
     @classmethod
-    def empty(cls, spark, n_partitions, expected_keys,
-              broadcast_max_bytes: int = BROADCAST_MAX_BYTES) -> "CuckooSeenSet":
+    def empty(cls, spark, n_partitions, expected_keys) -> "CuckooSeenSet":
         per_part = max(1, math.ceil(expected_keys / n_partitions))
         n_buckets = max(64, 1 << math.ceil(
             math.log2(per_part / (cls.SLOTS * CUCKOO_LOAD_FACTOR) + 1)
         ))
-        return cls(spark, n_partitions, n_buckets,
-                   broadcast_max_bytes=broadcast_max_bytes)
+        return cls(spark, n_partitions, n_buckets)
 
     @classmethod
-    def from_df(cls, df, n_partitions,
-                broadcast_max_bytes: int = BROADCAST_MAX_BYTES) -> "CuckooSeenSet":
+    def from_df(cls, df, n_partitions) -> "CuckooSeenSet":
         head = df.agg(
             F.first("n_bits").alias("n_bits"),
             F.sum("n_items").alias("n_items"),
         ).collect()
         if not head or head[0]["n_bits"] is None:
-            return cls.empty(df.sparkSession, n_partitions, 1,
-                             broadcast_max_bytes=broadcast_max_bytes)
+            return cls.empty(df.sparkSession, n_partitions, 1)
         n_buckets = int(head[0]["n_bits"]) // (cls.SLOTS * 16)
         return cls(df.sparkSession, n_partitions, n_buckets, df=df,
-                   n_items=int(head[0]["n_items"]),
-                   broadcast_max_bytes=broadcast_max_bytes)
+                   n_items=int(head[0]["n_items"]))
 
     # -- DataFrame surfaces ----------------------------------------------------
     def _apply_keys(self, keys: DataFrame, fp_col: str, op: str) -> None:
@@ -504,7 +429,6 @@ class CuckooSeenSet(BloomSeenSet):
         )
         row = self.df.agg(F.sum("n_items").alias("n")).collect()[0]
         self.n_items = int(row["n"] or 0)
-        self._invalidate_bcast()
 
     def add_keys(self, keys: DataFrame, fp_col: str = "url_fp") -> None:
         self._apply_keys(keys, fp_col, "insert")
@@ -515,32 +439,7 @@ class CuckooSeenSet(BloomSeenSet):
         retract URLs they enqueued)."""
         self._apply_keys(keys, fp_col, "delete")
 
-    def _probe_broadcast(self, df: DataFrame, fp_col: str) -> DataFrame:
-        nb, slots = self.n_buckets, self.SLOTS
-        if self._bcast is None:
-            tables = np.zeros((self.n_partitions, nb, slots), dtype=np.uint16)
-            for r in self.df.collect():  # gated by broadcast_max_bytes
-                tables[int(r["partition_id"])] = np.frombuffer(
-                    bytes(r["bloom"]), dtype=np.uint16
-                ).reshape(nb, slots)
-            self._bcast = df.sparkSession.sparkContext.broadcast(tables)
-        b = self._bcast
-
-        @F.pandas_udf(T.BooleanType())
-        def probe(fps: pd.Series) -> pd.Series:
-            tables = b.value
-            a = fps.to_numpy(dtype=np.int64)
-            n_parts = tables.shape[0]
-            pid = (a % n_parts + n_parts) % n_parts
-            out = np.zeros(len(a), dtype=bool)
-            for p in np.unique(pid):
-                m = pid == p
-                out[m] = _cuckoo_lookup(tables[p], a[m], nb)
-            return pd.Series(out)
-
-        return df.withColumn("maybe_seen", probe(F.col(fp_col)))
-
-    def _probe_partitioned(self, df: DataFrame, fp_col: str) -> DataFrame:
+    def _probe_group(self):
         nb, slots = self.n_buckets, self.SLOTS
 
         def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -552,7 +451,7 @@ class CuckooSeenSet(BloomSeenSet):
             return pd.DataFrame(
                 {"fp": fps, "maybe_seen": _cuckoo_lookup(table, fps, nb)})
 
-        return _join_back_probe(df, fp_col, self.df, self.n_partitions, probe_group)
+        return probe_group
 
 
 def filter_unseen(

@@ -20,7 +20,7 @@ from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (used in metrics_cube)
+from pyspark.sql import functions as F
 
 from nlnieuwscrawler_spark import spec
 from nlnieuwscrawler_spark.operators import asof, seen as seen_op

@@ -37,7 +37,6 @@ class EpochResult:
     crawl_log: DataFrame       # this epoch's attempts (seq starts at 1)
     cached: list = field(default_factory=list)  # persisted intermediates —
     #                      caller unpersists after materializing the outputs
-    metrics: dict = field(default_factory=dict)
 
 
 def seeds_frontier(seeds: DataFrame) -> DataFrame:

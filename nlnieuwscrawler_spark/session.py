@@ -9,6 +9,8 @@ DuckDB oracle comparison is stable.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -79,134 +81,105 @@ def _warm_up(spark: SparkSession) -> None:
     ~2 s) and make per-query timings incomparable across runs. Doing it at
     session construction uses no input data and computes nothing any query
     reuses — it is engine init, not precomputation.
+
+    No step is optional: an error in any of them is raised, and the
+    ``spark.nlnc.warmed`` marker is set only once all of them have run.
     """
     marker = "spark.nlnc.warmed"
-    try:
-        if spark.conf.get(marker, None) == "1":
-            return
-    except Exception:
-        pass
+    if spark.conf.get(marker, None) == "1":
+        return
     from pyspark.sql import functions as F
 
+    df = spark.range(0, 1000, 1, 4).select(
+        F.col("id"), F.xxhash64("id").alias("h")
+    )
+    # shuffle + AQE + broadcast-join machinery
+    small = spark.range(0, 10).select(F.col("id"), F.lit(1).alias("one"))
+    agg = df.groupBy((F.col("h") % 8).alias("k")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    agg.join(F.broadcast(small), agg["k"] == small["id"], "left").count()
+    # Python worker pool + Arrow serializer (the pandas-UDF path).
+    # NOTE: ``pd`` must be importable from MODULE globals — with
+    # ``from __future__ import annotations`` the ``pd.Series`` hints
+    # are strings and pyspark resolves them via the function's
+    # __globals__; a function-local ``import pandas`` made the
+    # decorator raise UNSUPPORTED_SIGNATURE.
+
+    @F.pandas_udf("long")
+    def _noop_udf(s: pd.Series) -> pd.Series:
+        return s
+
+    spark.range(0, 100).select(_noop_udf("id")).count()
+    # block manager / local checkpoint path
+    spark.range(0, 10).localCheckpoint(eager=True).count()
+    # Hadoop FS + parquet writer/committer + vectorized reader init
+    # (first parquet touch costs ~2.5 s on this box): one throwaway
+    # 10-row file in a temp dir, written and read back
+    tmp = tempfile.mkdtemp(prefix="nlnc_warm_")
     try:
-        df = spark.range(0, 1000, 1, 4).select(
-            F.col("id"), F.xxhash64("id").alias("h")
-        )
-        # shuffle + AQE + broadcast-join machinery
-        small = spark.range(0, 10).select(F.col("id"), F.lit(1).alias("one"))
-        agg = df.groupBy((F.col("h") % 8).alias("k")).agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        agg.join(F.broadcast(small), agg["k"] == small["id"], "left").count()
-        # Python worker pool + Arrow serializer (the pandas-UDF path).
-        # NOTE: ``pd`` must be importable from MODULE globals — with
-        # ``from __future__ import annotations`` the ``pd.Series`` hints
-        # are strings and pyspark resolves them via the function's
-        # __globals__; a function-local ``import pandas`` made the
-        # decorator raise UNSUPPORTED_SIGNATURE, silently truncating the
-        # warm-up at this line on every session (caught in r7: the
-        # marker below was never set).
+        spark.range(0, 10).write.mode("overwrite").parquet(tmp)
+        spark.read.parquet(tmp).count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    # range partitioner (sampling), sort, mapInPandas and the
+    # MEMORY_AND_DISK persist path used by the sequence operators
+    rp = (
+        spark.range(0, 1000)
+        .repartitionByRange(4, "id")
+        .sortWithinPartitions("id")
+        .persist()
+    )
 
-        @F.pandas_udf("long")
-        def _noop_udf(s: pd.Series) -> pd.Series:
-            return s
+    def _ident(batches):
+        yield from batches
 
-        spark.range(0, 100).select(_noop_udf("id")).count()
-        # block manager / local checkpoint path
-        spark.range(0, 10).localCheckpoint(eager=True).count()
-        # Hadoop FS + parquet writer/committer + vectorized reader init
-        # (first parquet touch costs ~2.5 s on this box): one throwaway
-        # 10-row file in a temp dir, written and read back
-        import shutil
-        import tempfile
+    rp.mapInPandas(_ident, "id long").count()
+    rp.unpersist()
+    # Python DataSource machinery: the plan-time worker processes
+    # (create_data_source / plan_data_source_read) and the arrow read
+    # path spin up on first use of ANY registered Python source and
+    # are keyed by worker module, not source class — measured ~6 s on
+    # this box (python_datasource query: 6.6 s cold vs 0.7 s warm;
+    # 1.4 s cold after this). A one-row inline source warms the pool
+    # without touching any real source or input data.
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+    )
 
-        tmp = tempfile.mkdtemp(prefix="nlnc_warm_")
-        try:
-            spark.range(0, 10).write.mode("overwrite").parquet(tmp)
-            spark.read.parquet(tmp).count()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        # range partitioner (sampling), sort, mapInPandas and the
-        # MEMORY_AND_DISK persist path used by the sequence operators
-        rp = (
-            spark.range(0, 1000)
-            .repartitionByRange(4, "id")
-            .sortWithinPartitions("id")
-            .persist()
-        )
+    class _WarmReader(DataSourceReader):
+        def partitions(self):
+            return [InputPartition(0)]
 
-        def _ident(batches):
-            yield from batches
+        def read(self, partition):
+            yield (0,)
 
-        rp.mapInPandas(_ident, "id long").count()
-        rp.unpersist()
-        # Python DataSource machinery: the plan-time worker processes
-        # (create_data_source / plan_data_source_read) and the arrow read
-        # path spin up on first use of ANY registered Python source and
-        # are keyed by worker module, not source class — measured ~6 s on
-        # this box (python_datasource query: 6.6 s cold vs 0.7 s warm;
-        # 1.4 s cold after this). A one-row inline source warms the pool
-        # without touching any real source or input data. Own try/except:
-        # a failure here must not re-trigger the earlier warm jobs on the
-        # next get_spark call.
-        try:
-            from pyspark.sql.datasource import (
-                DataSource,
-                DataSourceReader,
-                InputPartition,
-            )
+    class _WarmSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "nlnc_warm_src"
 
-            class _WarmReader(DataSourceReader):
-                def partitions(self):
-                    return [InputPartition(0)]
+        def schema(self):
+            return "i long"
 
-                def read(self, partition):
-                    yield (0,)
+        def reader(self, schema):
+            return _WarmReader()
 
-            class _WarmSource(DataSource):
-                @classmethod
-                def name(cls):
-                    return "nlnc_warm_src"
+    spark.dataSource.register(_WarmSource)
+    spark.read.format("nlnc_warm_src").load().count()
+    # MLlib class graph + Breeze/BLAS native init: the first
+    # KMeans.fit in a session pays ~1.1 s of JVM-side loading no
+    # matter how tiny the input (measured: ann_ivf — the one MLlib
+    # consumer — 5.0 s cold vs 3.95 s after this 20-row fit,
+    # alternating fresh-process A/B). Synthetic rows, result discarded.
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.linalg import Vectors
 
-                def schema(self):
-                    return "i long"
-
-                def reader(self, schema):
-                    return _WarmReader()
-
-            spark.dataSource.register(_WarmSource)
-            spark.read.format("nlnc_warm_src").load().count()
-        except Exception:
-            if os.environ.get("NLNC_WARM_DEBUG"):
-                import traceback
-
-                traceback.print_exc()
-        # MLlib class graph + Breeze/BLAS native init: the first
-        # KMeans.fit in a session pays ~1.1 s of JVM-side loading no
-        # matter how tiny the input (measured: ann_ivf — the one MLlib
-        # consumer — 5.0 s cold vs 3.95 s after this 20-row fit,
-        # alternating fresh-process A/B). Synthetic rows, result
-        # discarded; own try/except for the same reason as above.
-        try:
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.linalg import Vectors
-
-            mldf = spark.createDataFrame(
-                [(Vectors.dense([float(i), float(i % 3)]),) for i in range(20)],
-                ["features"],
-            )
-            KMeans(k=2, maxIter=1, seed=1).fit(mldf)
-        except Exception:
-            if os.environ.get("NLNC_WARM_DEBUG"):
-                import traceback
-
-                traceback.print_exc()
-        spark.conf.set(marker, "1")
-    except Exception:
-        # warm-up is best-effort: a restricted environment (e.g. a
-        # stopped context in teardown-order tests) must not break
-        # session construction
-        if os.environ.get("NLNC_WARM_DEBUG"):
-            import traceback
-
-            traceback.print_exc()
+    mldf = spark.createDataFrame(
+        [(Vectors.dense([float(i), float(i % 3)]),) for i in range(20)],
+        ["features"],
+    )
+    KMeans(k=2, maxIter=1, seed=1).fit(mldf)
+    spark.conf.set(marker, "1")

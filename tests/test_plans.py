@@ -200,9 +200,9 @@ def test_dedup_spans_plan_shape(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in plan
     n_shuffles = plan.count("Exchange hashpartitioning")
-    n_bcast = plan.count("Exchange HashedRelationBroadcastMode")
+    n_broadcasts = plan.count("Exchange HashedRelationBroadcastMode")
     assert n_shuffles == 2, plan
-    assert n_bcast == 1, plan
+    assert n_broadcasts == 1, plan
 
 
 def test_lm_bigram_score_plan_no_bnlj(spark):
